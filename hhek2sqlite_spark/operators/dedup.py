@@ -37,10 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hhek2sqlite_spark.operators.text import fingerprint, let_once, normalized, tokens
-from hhek2sqlite_spark.operators.util import (
-    own_caches,
-    release_owned_caches,
-)
+from hhek2sqlite_spark.operators.util import release_local_checkpoints
 from hhek2sqlite_spark.operators.util import spread as _spread_impl
 
 # ---------------------------------------------------------------------------
@@ -199,10 +196,13 @@ def ngram_jaccard_pairs(
     den*shared >= num*(na+nb-shared)."""
     # ONE shuffle on the shingle: collect the (distinct, sorted) doc ids per
     # shingle, drop hot shingles by df, and drop the shingle string itself —
-    # everything downstream needs only the id arrays. Cached because both
-    # the pair expansion and the per-doc sizes read it; the cached set is a
-    # fraction of the raw shingle rows (rare shingles only, no strings).
-    buckets = rare_shingle_buckets(documents, n=n, max_df=max_df, id_col=id_col).cache()
+    # everything downstream needs only the id arrays. Checkpointed (lazily,
+    # freed with the result by owned_result) because both the pair
+    # expansion and the per-doc sizes read it; the set is a fraction of
+    # the raw shingle rows (rare shingles only, no strings).
+    buckets = rare_shingle_buckets(
+        documents, n=n, max_df=max_df, id_col=id_col
+    ).localCheckpoint(eager=False)
     sizes = (
         buckets.select(F.explode("ids").alias(id_col))
         .groupBy(id_col)
@@ -213,17 +213,14 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    # own_caches (r18): the buckets cache is released with the result
-    # (owned_result / release_local_checkpoints), not left to GC
-    return own_caches(
+    return (
         shared.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("na")), "id_a")
         .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("nb")), "id_b")
         .filter(
             F.col("shared") * threshold_den
             >= F.lit(threshold_num) * (F.col("na") + F.col("nb") - F.col("shared"))
         )
-        .select("id_a", "id_b", "shared", "na", "nb"),
-        buckets,
+        .select("id_a", "id_b", "shared", "na", "nb")
     )
 
 
@@ -427,7 +424,11 @@ def minhash_lsh_pairs(
     similarity (count of equal components, an integer — est jaccard =
     est_matches / k). Returns (id_a, id_b, est_matches)."""
     rows = k // bands
-    sig = minhash_signatures(documents, k=k, n=n, id_col=id_col).cache()
+    # lazy local checkpoint: the banding self-join and both verify joins
+    # read one signature relation; freed with the result by owned_result
+    sig = minhash_signatures(documents, k=k, n=n, id_col=id_col).localCheckpoint(
+        eager=False
+    )
     # integer band keys (15 bits per row value, disjointly packed) instead
     # of hash(slice): engine-portable for the oracle, and the banding
     # shuffle carries one BIGINT per (doc, band) instead of a hash of an
@@ -477,8 +478,7 @@ def minhash_lsh_pairs(
 
     _est_matches = _est_matches.asNondeterministic()
 
-    # own_caches (r18): the signature cache is released with the result
-    return own_caches(
+    return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
@@ -486,8 +486,7 @@ def minhash_lsh_pairs(
             "id_b",
             _est_matches(F.col("sig_a"), F.col("sig_b")).alias("est_matches"),
         )
-        .filter(F.col("est_matches") >= min_est_matches),
-        sig,
+        .filter(F.col("est_matches") >= min_est_matches)
     )
 
 
@@ -658,7 +657,9 @@ def neardup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
     one aggregate action per round instead of a self-join diff. The
     converged labels are localCheckpoint-ed (materialized, lineage cut)
     so every per-round cache can be unpersisted before returning —
-    repeated calls leak no storage.
+    repeated calls leak no storage. ``pairs`` is consumed: the local
+    checkpoints in its plan are released before returning, so it must
+    not be executed afterwards.
 
     r17 re-plan (guide §2.4 — remove shuffles outright): the old round
     was THREE keyed exchanges (sym⋈labels on the neighbor key, groupBy
@@ -697,11 +698,10 @@ def neardup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
         edges.unpersist()
         symp.unpersist()
         labels.unpersist()
-        # r18: the upstream pair generator (minhash_lsh_pairs) attaches
-        # its signature cache to ``pairs`` — the returned labels are
-        # checkpointed before this runs, so the pair pipeline's caches
-        # can be released here instead of leaking past the operator
-        release_owned_caches(pairs)
+        # the pair relation is consumed here: the returned labels are
+        # checkpointed before this runs, so the checkpoints in the pair
+        # plan (minhash_lsh_pairs' signatures) are freed with it
+        release_local_checkpoints(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -762,7 +762,9 @@ def simhash_pairs(
     """Near-dup candidates: equal 15-bit chunk (pigeonhole: hamming<=3
     over 4 chunks guarantees one equal chunk), verified by
     bit_count(xor) <= max_hamming."""
-    fps = simhash_fingerprints(documents, id_col).cache()
+    # lazy local checkpoint: both chunk self-join sides read it; freed
+    # with the result by owned_result
+    fps = simhash_fingerprints(documents, id_col).localCheckpoint(eager=False)
     chunk_mask = (1 << _SIMHASH_CHUNK_BITS) - 1
     chunked = fps.select(
         F.col(id_col),
@@ -791,12 +793,8 @@ def simhash_pairs(
         .distinct()
     )
     hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    # own_caches (r18): the fingerprint cache is released with the result
-    return own_caches(
-        pairs.select("id_a", "id_b", hamming.alias("hamming")).filter(
-            F.col("hamming") <= max_hamming
-        ),
-        fps,
+    return pairs.select("id_a", "id_b", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 

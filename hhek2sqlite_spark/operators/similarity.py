@@ -23,6 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hhek2sqlite_spark.operators.util import release_local_checkpoints
+from hhek2sqlite_spark.sources.parquet import file_signature
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product via zip_with + left fold — JVM-side, no UDF.
@@ -487,19 +490,20 @@ def lsh_bucket_pairs(
     # doubled the dominant map stage.
     _band_payload = _band_payload.asNondeterministic()
 
-    # cache the N-row payload relation BEFORE the band explode (r17,
-    # guide §4.2/§2.4 — the minhash_signatures precedent): both self-join
-    # sides and nothing else re-derive it, so without the cache the
-    # 64-plane matmul ran once per side. Pre-explode placement keeps the
-    # cached footprint at N rows (vec_id, eq, keys, lo, hi — fixed
+    # materialize the N-row payload relation ONCE, BEFORE the band
+    # explode (r17, guide §4.2/§2.4 — the minhash_signatures precedent):
+    # both self-join sides and the verify vectors read it, so without it
+    # the 64-plane matmul ran once per side. Pre-explode placement keeps
+    # the stored footprint at N rows (vec_id, eq, keys, lo, hi — fixed
     # width); the cheap codegen explode replays per consumer. Interleaved
     # A/B at sf0.1 (6 rounds, drop-1 medians): plain 2.79s /
     # post-explode 2.71s / pre-explode 2.39s for similarity_lsh, 1.29 /
-    # 1.20 / 1.08 for the highsim point. Like the other operator-level
-    # caches, lifetime is construction-scoped (ContextCleaner reclaims
-    # once the result is dropped).
+    # 1.20 / 1.08 for the highsim point. A lazy local checkpoint, freed
+    # with the result by owned_result / release_local_checkpoints.
     payload = (
-        e.withColumn("eq", eq).withColumn("_p", _band_payload(F.col("eq"))).cache()
+        e.withColumn("eq", eq)
+        .withColumn("_p", _band_payload(F.col("eq")))
+        .localCheckpoint(eager=False)
     )
     hashed = payload.select(
         "vec_id",
@@ -542,7 +546,7 @@ def lsh_bucket_pairs(
     # round, so no half-to-even divergence). sim_e6 is therefore the
     # exact cosine of the quantized vectors — within 2e-6 of the float
     # cosine, and the SQL oracle computes the identical quantity.
-    # derive the verify-side vectors from the CACHED payload relation
+    # derive the verify-side vectors from the checkpointed payload relation
     # (identical eq values — same expression) instead of re-scanning and
     # re-quantizing per broadcast side
     eqn = payload.select(
@@ -591,13 +595,7 @@ def lsh_bucket_pairs(
     # repartition/explode lose size stats, so Catalyst won't pick the
     # broadcast on its own. At corpus scales where N no longer fits a
     # broadcast, drop the hint and these become plain shuffle equi-joins.
-    # own_caches (r18, VERDICT r17 #6): the payload cache's lifetime is
-    # now OWNED — released by owned_result/release_local_checkpoints
-    # when the result is dropped, instead of waiting on ContextCleaner
-    # GC (guide §5: unpersist when done).
-    from .util import own_caches
-
-    return own_caches(
+    return (
         candidates.join(F.broadcast(ea), "id_a")
         .join(F.broadcast(eb), "id_b")
         .select(
@@ -605,8 +603,7 @@ def lsh_bucket_pairs(
             "id_b",
             _sim_q(F.col("qa"), F.col("qb"), F.col("na"), F.col("nb")).alias("sim_e6"),
         )
-        .filter(F.col("sim_e6") >= min_sim_e6),
-        payload,
+        .filter(F.col("sim_e6") >= min_sim_e6)
     )
 
 
@@ -1345,9 +1342,6 @@ def _store_file_signature(store: DataFrame):
     """(app_id, ((path, size, mtime_ns), ...)) when every plan leaf of
     ``store`` is a local file-source relation; None otherwise (no
     caching — e.g. checkpoint-leaf stores, non-local filesystems)."""
-    import os as _os
-    from urllib.parse import urlparse
-
     try:
         leaves = store._jdf.queryExecution().analyzed().collectLeaves()
         for i in range(leaves.size()):
@@ -1361,17 +1355,10 @@ def _store_file_signature(store: DataFrame):
         return None
     if not files or len(files) > _ROUTER_FILES_CAP:
         return None
-    sig = []
-    for f in sorted(files):
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            st = _os.stat(u.path)
-        except OSError:
-            return None
-        sig.append((u.path, st.st_size, st.st_mtime_ns))
-    return (store.sparkSession.sparkContext.applicationId, tuple(sig))
+    sig = file_signature(files)
+    if sig is None:
+        return None
+    return (store.sparkSession.sparkContext.applicationId, sig)
 
 
 def _cached_router(store: DataFrame) -> dict | None:
@@ -1393,7 +1380,7 @@ def _cached_router(store: DataFrame) -> dict | None:
         if ekey == key:
             try:
                 if eplan.sameResult(jplan):
-                    return ehint
+                    return dict(ehint)
             except Exception:
                 return None
     meta = read_semdedup_store_meta(store)
@@ -1419,7 +1406,7 @@ def _cached_router(store: DataFrame) -> dict | None:
         hint = {"meta": meta, "coarse": coarse, "seed_rows": None}
     _ROUTER_CACHE.append((key, jplan, hint))
     del _ROUTER_CACHE[:-_ROUTER_CACHE_MAX]
-    return hint
+    return dict(hint)
 
 
 def carry_store_router(derived: DataFrame, base: DataFrame) -> DataFrame:
@@ -2087,6 +2074,10 @@ def append_to_semdedup_store(
     # an assignment⋈decisions join (and its broadcast job) that every
     # later scan of the extended store re-ran
     judged = judged.localCheckpoint(eager=True)
+    # the batch assignment judged was computed from is no longer read
+    # (the pre-checkpoint judged is NOT released: its lineage holds the
+    # store's own checkpoint, which new_store still reads)
+    release_local_checkpoints(assigned_batch)
     decisions = judged.select("vec_id", "cell", "admitted")
     admitted = judged.filter(F.col("admitted") == 1).select(
         "vec_id",

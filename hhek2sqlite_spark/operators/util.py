@@ -6,6 +6,14 @@ breaks hot-key skew that AQE's skew-join (which only splits oversized
 ``materialize_access_path`` is the engine's reading of the reference's
 15 secondary indexes (SURVEY.md 4.3): an index in a single-file database
 becomes a partition + sort layout decision in a columnar lake.
+
+Lifetime rule for operator state: shared state an operator builds for
+its result (a relation read by more than one branch of the plan it
+returns) is a ``localCheckpoint`` — eager when the operator itself
+needs the rows, ``eager=False`` when it returns a lazy plan — and
+``owned_result`` / ``release_local_checkpoints`` free it by walking the
+result's plan. An operator that ``.cache()``s a relation unpersists it
+itself before returning.
 """
 
 from __future__ import annotations
@@ -107,55 +115,6 @@ def materialize_access_path(
     writer.parquet(path)
 
 
-# construction-scoped CACHES owned by an operator's lazy result (round
-# 18, VERDICT r17 #6): operators that .cache() a shared relation and
-# return a LAZY plan over it (lsh_bucket_pairs' band payload,
-# minhash_lsh_pairs' signatures, simhash_pairs' fingerprints,
-# ngram_jaccard_pairs' buckets) cannot unpersist inside the operator —
-# the caller has not executed the plan yet. They attach the cached
-# DataFrame handles to the result via ``own_caches``;
-# ``release_local_checkpoints`` (hence ``owned_result``) unpersists
-# them deterministically at release time, so repeated calls leave the
-# CacheManager flat instead of relying on ContextCleaner GC — the same
-# round-10 argument that made checkpoint release explicit.
-_OWNED_CACHES_ATTR = "_hhek_owned_caches"
-
-
-def own_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Attach construction-scoped cached relations to an operator's
-    result so the release path can unpersist them. The attribute lives
-    on the returned DataFrame OBJECT only (like the semdedup store
-    hint): an operator consuming the result internally must release the
-    caches itself once its own output is materialized (see
-    neardup_clusters)."""
-    existing = tuple(getattr(result, _OWNED_CACHES_ATTR, ()))
-    setattr(result, _OWNED_CACHES_ATTR, existing + tuple(cached))
-    return result
-
-
-def release_owned_caches(df: DataFrame) -> int:
-    """Unpersist every cache attached to ``df`` via ``own_caches`` and
-    return how many were released. The DataFrame must not be executed
-    afterwards unless recomputing the cached relations is acceptable
-    (unlike a freed localCheckpoint, an unpersisted cache silently
-    recomputes — correct, just no longer shared)."""
-    cached = tuple(getattr(df, _OWNED_CACHES_ATTR, ()))
-    if not cached:
-        return 0
-    released = 0
-    for c in cached:
-        try:
-            c.unpersist()
-            released += 1
-        except Exception:  # noqa: BLE001 - best-effort per cache
-            pass
-    try:
-        delattr(df, _OWNED_CACHES_ATTR)
-    except AttributeError:
-        pass
-    return released
-
-
 @contextmanager
 def owned_result(df: DataFrame):
     """Owned-lifetime handle for the EAGER operators (round 16, VERDICT
@@ -185,7 +144,9 @@ def release_local_checkpoints(df: DataFrame) -> int:
     """Deterministically unpersist the block sets behind every
     ``localCheckpoint`` relation in ``df``'s plan. Call when done with a
     result whose operator materialized a shared relation this way
-    (tfidf_topk, boilerplate_shingles, pagerank, minhash cluster tails).
+    (tfidf_topk, boilerplate_shingles, pagerank, minhash cluster tails,
+    and the lazy checkpoints of minhash_lsh_pairs, ngram_jaccard_pairs,
+    simhash_pairs and lsh_bucket_pairs).
 
     Why explicit release exists at all: the checkpoint blocks are
     *supposed* to be reclaimed by Spark's ContextCleaner once the caller
@@ -200,13 +161,11 @@ def release_local_checkpoints(df: DataFrame) -> int:
     afterwards (a local checkpoint is non-recomputable by design —
     Spark raises on access to the freed blocks).
 
-    Returns the number of checkpointed RDDs unpersisted (caches
-    attached via ``own_caches`` are released too, but not counted —
-    callers pin the checkpoint count). Safe on any DataFrame: plans
-    without LogicalRDD nodes release nothing, and unpersist on a
-    non-persisted RDD is a no-op.
+    Returns the number of checkpointed RDDs unpersisted. Safe on any
+    DataFrame: plans without LogicalRDD nodes release nothing, and
+    unpersist on a non-persisted (or never-materialized lazy) RDD is a
+    no-op.
     """
-    release_owned_caches(df)
     try:
         root = df._jdf.queryExecution().analyzed()
     except Exception:  # Connect / non-classic sessions: nothing to walk

@@ -39,8 +39,9 @@ def get_spark(app_name: str = "hhek2sqlite_spark", *, shuffle_partitions: int | 
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce/repartition stages that sit on top of a cached
-        # plan (minhash/simhash cache their signature sets); without this
-        # a .cache() pins the pre-AQE partition count for every consumer
+        # plan (pagerank's edge persist(), neardup_clusters' loop caches,
+        # the IVF index); without this a .cache() pins the pre-AQE
+        # partition count for every consumer
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # runtime bloom-filter join pruning: a selective filter on one

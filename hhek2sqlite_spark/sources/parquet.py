@@ -11,6 +11,7 @@ assumes single-file inputs.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,18 +42,49 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # pays because the metastore/catalog supplies the schema. Caching the
 # inferred StructType per path is the metastore equivalent: METADATA
 # only, in-process only (dies with the interpreter), and every query
-# still computes its RESULT from the parquet bytes on every run.
-_SCHEMA_CACHE: dict = {}
+# still computes its RESULT from the parquet bytes on every run. Entries
+# are keyed by path and checked against the files' ``file_signature``:
+# a table rewritten at the same path is re-inferred, not read with its
+# old schema (by-name matching would silently return NULL columns).
+_SCHEMA_CACHE: dict = {}  # path -> (file signature, StructType)
+
+
+def file_signature(paths) -> tuple | None:
+    """Sorted ``((path, size, mtime_ns), ...)`` over the local files
+    ``paths`` name (plain paths or ``file:`` URIs; a directory stands
+    for every file under it), or None when one is non-local or cannot
+    be stat-ed — callers then skip caching. Rewriting a file changes
+    its mtime_ns, so the signature keys process-level caches that must
+    notice when their files change."""
+    sig = []
+    for p in paths:
+        u = urlparse(p)
+        if u.scheme not in ("", "file"):
+            return None
+        files = [u.path]
+        if os.path.isdir(u.path):
+            files = [os.path.join(d, f) for d, _, fs in os.walk(u.path) for f in fs]
+        for f in files:
+            try:
+                st = os.stat(f)
+            except OSError:
+                return None
+            sig.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema  # one footer job per path
-        _SCHEMA_CACHE[path] = schema
+    sig = file_signature([path])
+    cached = _SCHEMA_CACHE.get(path)
+    if sig is not None and cached is not None and cached[0] == sig:
+        schema = cached[1]
+    else:
+        schema = spark.read.parquet(path).schema  # one footer job per version
+        if sig is not None:
+            _SCHEMA_CACHE[path] = (sig, schema)
     df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = _normalize_events(df)

@@ -198,6 +198,7 @@ def judge_semdedup_batch(
     # ONE batch-sized eager checkpoint feeding both writes (they must
     # not re-run the judge — same reuse contract as append_to_semdedup_store)
     judged = judged.localCheckpoint(eager=True)
+    release_local_checkpoints(assigned_batch)
     try:
         judged.select("vec_id", "cell", "admitted").write.mode(
             "overwrite"

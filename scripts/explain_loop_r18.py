@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from hhek2sqlite_spark.operators import dedup, graph  # noqa: E402
-from hhek2sqlite_spark.operators.util import release_owned_caches  # noqa: E402
+from hhek2sqlite_spark.operators.util import release_local_checkpoints  # noqa: E402
 from hhek2sqlite_spark.session import get_spark  # noqa: E402
 from hhek2sqlite_spark.sources.parquet import load_table  # noqa: E402
 
@@ -78,7 +78,7 @@ def main() -> None:
     # --- label-propagation round (the minhash_clusters recipe) ----------
     pairs = dedup.minhash_lsh_pairs(load_table(spark, SF_DIR, "documents"))
     pairs_leaf = pairs.select("id_a", "id_b").localCheckpoint()
-    release_owned_caches(pairs)
+    release_local_checkpoints(pairs)
     edges2, symp, labels = dedup._closed_neighborhood(pairs_leaf)
     labels.count()  # materializes the symp + labels caches, as the loop does
     _dump(dedup._lp_round(symp, labels), "minhash_clusters_loopbody.txt")

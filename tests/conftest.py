@@ -20,3 +20,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture(scope="session")
+def persistent_rdd_ids(spark):
+    """Callable returning the set of RDD ids the session holds persisted
+    (caches and unreleased local checkpoints) — snapshot before and
+    after a call to assert it leaves nothing behind."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def _ids() -> set[int]:
+        it = jsc.getPersistentRDDs().keysIterator()
+        out = set()
+        while it.hasNext():
+            out.add(it.next())
+        return out
+
+    return _ids

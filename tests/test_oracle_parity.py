@@ -7,6 +7,7 @@ speed.
 import pytest
 
 import __spark_entry__ as entrymod
+from hhek2sqlite_spark.plans import extensions
 from hhek2sqlite_spark.testing.parity import run_parity
 
 QUERIES = entrymod.queries()
@@ -20,10 +21,25 @@ def test_every_query_has_callable():
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_parity(spark, sf_dir, name):
+def test_oracle_parity(spark, sf_dir, name, persistent_rdd_ids):
+    """Parity, plus the leak invariant: once run_parity has released the
+    result, the query has left no persisted RDD (cache or local
+    checkpoint) and no CacheManager entry behind."""
     assert name in QUERIES, f"oracle_sql has {name} but queries() does not"
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    rdds, n_cached = persistent_rdd_ids(), cache_mgr.numCachedEntries()
+    ivf_keys = set(extensions._IVF_INDEX)
     res = run_parity(spark, name, QUERIES[name], ORACLES[name], sf_dir)
     assert res.ok, str(res)
+    # the one named exception: similarity_ivf's first call per sf_dir
+    # fills the session-lived _IVF_INDEX — a cached DataFrame holding the
+    # built ANN index, amortized serving state kept by design
+    allowed = len(set(extensions._IVF_INDEX) - ivf_keys) if name == "similarity_ivf" else 0
+    leaked = persistent_rdd_ids() - rdds
+    assert len(leaked) == allowed, f"{name} left persisted RDDs {sorted(leaked)}"
+    assert cache_mgr.numCachedEntries() - n_cached == allowed, (
+        f"{name} left CacheManager entries"
+    )
 
 
 def test_entry_smoke(spark):

@@ -251,7 +251,7 @@ def test_mixed_short_and_long_rows_same_table(tmp_path):
     assert Jet2File(p).read_rows("Personer") == rows_in
 
 
-def test_tfidf_no_cache_accumulation(spark):
+def test_tfidf_no_cache_accumulation(spark, persistent_rdd_ids):
     """VERDICT r9 task 9: repeated tfidf_topk runs must not accumulate
     cached relations. Two layers: the tf relation is localCheckpoint'ed,
     so NOTHING enters the CacheManager (the r9 leak was a persist()
@@ -269,26 +269,16 @@ def test_tfidf_no_cache_accumulation(spark):
         [(i, f"alpha beta gamma delta token{i % 7} epsilon zeta") for i in range(200)],
         ["doc_id", "text"],
     )
-    jsc = spark.sparkContext._jsc.sc()
-
-    def _ids():
-        m = jsc.getPersistentRDDs()
-        it = m.keysIterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     cache_was_empty = cache_mgr.isEmpty()  # shared session: other tests may cache
-    base = _ids()
+    base = persistent_rdd_ids()
     for _ in range(3):
         out = tfidf_topk(docs, k=3)
         assert out.count() > 0
         if cache_was_empty:
             assert cache_mgr.isEmpty(), "localCheckpoint must not touch CacheManager"
         assert release_local_checkpoints(out) == 1
-        leaked = _ids() - base
+        leaked = persistent_rdd_ids() - base
         assert not leaked, f"checkpoint blocks survived release: {sorted(leaked)}"
 
 

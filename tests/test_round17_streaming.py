@@ -184,3 +184,19 @@ def test_stream_store_refuses_seedless_base(spark, tmp_path):
     empty = spark.createDataFrame([], SEMDEDUP_STORE_DDL)
     with pytest.raises(ValueError, match="no seeds"):
         init_semdedup_stream_store(empty, str(tmp_path / "root"))
+
+
+def test_three_micro_batches_leave_no_checkpoint(spark, tmp_path, persistent_rdd_ids):
+    """The handler checkpoints the judged batch and releases it; the
+    batch-assignment checkpoint that judged was computed from must be
+    released too, so three micro-batches leave the persisted-RDD set
+    flat."""
+    root = _init_root(spark, tmp_path)
+    before = persistent_rdd_ids()
+    for batch_id in range(3):
+        batch = spark.createDataFrame(
+            _random_rows(12, 6, seed=40 + batch_id, id_offset=1000 + 100 * batch_id),
+            BATCH_SCHEMA,
+        )
+        judge_semdedup_batch(batch, batch_id, root=root)
+        assert not persistent_rdd_ids() - before, f"micro-batch {batch_id} leaked"

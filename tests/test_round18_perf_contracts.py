@@ -1,6 +1,6 @@
 """Round-18 optimization contracts: the session router cache for
 file-backed semdedup stores (correctness + invalidation), owned
-operator caches (CacheManager stays flat across repeated calls), the
+operator state (persisted RDDs stay flat across repeated calls), the
 single-aggregate store metadata read, the keep_ccell store build, and
 the streaming handler's single-materialization writes."""
 
@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hhek2sqlite_spark.operators import similarity
-from hhek2sqlite_spark.operators.util import owned_result, release_owned_caches
+from hhek2sqlite_spark.operators.util import owned_result, release_local_checkpoints
 
 BATCH_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -65,12 +65,18 @@ def test_router_cache_matches_cold_path_and_hits(spark, tmp_path):
 def test_router_cache_invalidates_on_rebuild_at_same_path(spark, tmp_path):
     """Overwriting the store path with a DIFFERENT corpus (same build
     parameters, so the metadata row is byte-identical) must not serve
-    the stale router: the file signature (size/mtime_ns) changes."""
+    the stale router: the file signature (size/mtime_ns) changes. The
+    second corpus holds exact copies of the batch vectors, so its
+    decisions provably differ: every batch row is rejected."""
     _clear_router_cache()
     path = str(tmp_path / "store_pq")
+    batch_rows = _rows(12, 6, seed=9, id_offset=1000)
     base1 = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
-    base2 = spark.createDataFrame(_rows(80, 6, seed=77), BATCH_SCHEMA)
-    batch = spark.createDataFrame(_rows(12, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
+    base2 = spark.createDataFrame(
+        _rows(68, 6, seed=77) + [(68 + i, e) for i, (_, e) in enumerate(batch_rows)],
+        BATCH_SCHEMA,
+    )
+    batch = spark.createDataFrame(batch_rows, BATCH_SCHEMA)
     s1 = similarity.materialize_semdedup_store(
         similarity.build_semdedup_store(base1, seed_stride=4, coarse_k=4), path
     )
@@ -84,7 +90,8 @@ def test_router_cache_invalidates_on_rebuild_at_same_path(spark, tmp_path):
         similarity.semantic_dedup_incremental_from_store(s2, batch)
     )
     assert d2 == d2_cold  # rebuilt store judged with the REBUILT router
-    assert d1 != d2 or True  # corpora differ; equality would be a fluke
+    assert all(admitted == 0 for _, _, admitted in d2)
+    assert d1 != d2
 
 
 def test_router_cache_ignores_filtered_store_relations(spark, tmp_path):
@@ -190,12 +197,13 @@ def test_store_ccell_only_on_seed_rows_and_matches_route(spark):
             assert r["ccell"] is None
 
 
-# --- owned operator caches -----------------------------------------------------
+# --- owned operator state ------------------------------------------------------
 
 
-def test_lsh_payload_cache_released_by_owned_result(spark):
-    """VERDICT r17 #6: repeated lsh_bucket_pairs calls must leave the
-    CacheManager flat once each result is released."""
+def test_lsh_payload_cache_released_by_owned_result(spark, persistent_rdd_ids):
+    """VERDICT r17 #6: repeated lsh_bucket_pairs calls must leave no
+    persisted RDD and no CacheManager entry once each result is
+    released."""
     emb = spark.createDataFrame(
         [
             (i, [float(x) for x in np.random.default_rng(i).normal(0, 1, 64)])
@@ -204,35 +212,93 @@ def test_lsh_payload_cache_released_by_owned_result(spark):
         BATCH_SCHEMA,
     )
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    cache_was_empty = cache_mgr.isEmpty()
+    base, n_cached = persistent_rdd_ids(), cache_mgr.numCachedEntries()
     for _ in range(3):
         with owned_result(similarity.lsh_bucket_pairs(emb)) as out:
             out.count()
-        if cache_was_empty:
-            assert cache_mgr.isEmpty(), "payload cache leaked past release"
+        assert not persistent_rdd_ids() - base, "payload checkpoint leaked past release"
+        assert cache_mgr.numCachedEntries() <= n_cached
 
 
-def test_minhash_pairs_cache_released_by_neardup_clusters(spark, sf_dir):
+def test_minhash_pairs_cache_released_by_neardup_clusters(
+    spark, sf_dir, persistent_rdd_ids
+):
     """neardup_clusters consumes the pair relation internally — it must
-    release the pair generator's signature cache before returning."""
+    release the pair generator's signature checkpoint before
+    returning. The result is an eager checkpoint over the labels alone,
+    so releasing it cannot free the signatures on neardup's behalf."""
     from hhek2sqlite_spark.operators import dedup
-    from hhek2sqlite_spark.operators.util import release_local_checkpoints
     from hhek2sqlite_spark.sources.parquet import load_table
 
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    cache_was_empty = cache_mgr.isEmpty()
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    base = persistent_rdd_ids()
+    docs = load_table(spark, sf_dir, "documents")
     out = dedup.neardup_clusters(dedup.minhash_lsh_pairs(docs))
     assert out.count() > 0
-    if cache_was_empty:
-        assert cache_mgr.isEmpty(), "signature cache leaked past the loop"
-    release_local_checkpoints(out)
+    assert release_local_checkpoints(out) == 1
+    assert not persistent_rdd_ids() - base, "signature checkpoint leaked past the loop"
 
 
-def test_release_owned_caches_is_idempotent_and_counts(spark):
-    df = spark.range(10).cache()
-    from hhek2sqlite_spark.operators.util import own_caches
+# --- review follow-ups ----------------------------------------------------------
 
-    result = own_caches(spark.range(5), df)
-    assert release_owned_caches(result) == 1
-    assert release_owned_caches(result) == 0  # attribute consumed
+
+def test_cached_router_hint_is_a_copy(spark, tmp_path):
+    """Mutating a hint returned by the session router cache must not
+    reach the cached entry: the next call sees the original."""
+    _clear_router_cache()
+    base = spark.createDataFrame(_rows(60, 6, seed=5), BATCH_SCHEMA)
+    reopened = similarity.materialize_semdedup_store(
+        similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4),
+        str(tmp_path / "store_pq"),
+    )
+    built = similarity._cached_router(reopened)
+    original = dict(built)
+    built["meta"] = None
+    hit = similarity._cached_router(reopened)
+    assert hit == original
+    hit["coarse"] = None
+    assert similarity._cached_router(reopened) == original
+    _clear_router_cache()
+
+
+def test_append_releases_batch_assignment(spark, tmp_path, persistent_rdd_ids):
+    """Each append checkpoints the judged batch; the batch-assignment
+    checkpoint it was computed from must be freed, so three appends
+    whose outputs are released leave the persisted-RDD set flat."""
+    base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
+    store = similarity.materialize_semdedup_store(
+        similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4),
+        str(tmp_path / "store_pq"),
+    )
+    before = persistent_rdd_ids()
+    for k in range(3):
+        batch = spark.createDataFrame(
+            _rows(12, 6, seed=20 + k, id_offset=1000 + 100 * k), BATCH_SCHEMA
+        )
+        decisions, new_store = similarity.append_to_semdedup_store(store, batch)
+        assert decisions.count() == 12
+        assert new_store.count() > 0
+        release_local_checkpoints(new_store)
+        assert not persistent_rdd_ids() - before, f"append {k} left a checkpoint"
+
+
+def test_load_table_sees_schema_of_rewritten_table(spark, tmp_path):
+    """The session schema cache is keyed on the files' (path, size,
+    mtime_ns): a table rewritten at the same path with an added column
+    is read with its NEW schema, not the cached one (by-name matching
+    against a stale schema would silently drop the column)."""
+    import pandas as pd
+
+    from hhek2sqlite_spark.sources.parquet import load_table
+
+    path = tmp_path / "nation.parquet"
+    pd.DataFrame({"n_nationkey": [1, 2], "n_name": ["a", "b"]}).to_parquet(path)
+    assert load_table(spark, str(tmp_path), "nation").columns == [
+        "n_nationkey",
+        "n_name",
+    ]
+    pd.DataFrame(
+        {"n_nationkey": [1, 2], "n_name": ["a", "b"], "n_extra": [7, 8]}
+    ).to_parquet(path)
+    df = load_table(spark, str(tmp_path), "nation")
+    assert df.columns == ["n_nationkey", "n_name", "n_extra"]
+    assert sorted(r.n_extra for r in df.collect()) == [7, 8]
