@@ -761,15 +761,7 @@ def semantic_dedup(
     lands in one shuffle partition per hot cell; AQE skew-join splits
     the probe side, and seed_stride bounds the damage by construction.
     """
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ed")
-    )
-    q = e.select(
-        "vec_id",
-        F.transform("ed", lambda x: F.round(x * _QUANT_SCALE).cast("long")).alias(
-            "eq"
-        ),
-    ).withColumn("n", F.sqrt(_dot_long(F.col("eq"), F.col("eq")).cast("double")))
+    q = _quantize(embeddings)
 
     seed_pred = F.col("vec_id") % seed_stride == 0
     if seed_max_id is not None:
@@ -784,40 +776,71 @@ def semantic_dedup(
             [], "vec_id long, cell long, kept int"
         )
 
-    a = assigned.select(
+    # every row is new, so precedence is the lower vec_id alone
+    return _flag_near_dups(
+        assigned.withColumn("is_new", F.lit(1)), assigned, tau_e6
+    ).select(
+        "vec_id",
+        F.col("cell").cast("long").alias("cell"),
+        F.col("keep").alias("kept"),
+    )
+
+
+def _quantize(df: DataFrame, *extra) -> DataFrame:
+    """``(vec_id, *extra, eq, n)`` from ``df``'s (vec_id, embedding):
+    ``eq`` is every coordinate rounded to an integer at _QUANT_SCALE,
+    ``n`` its L2 norm — the quantization every semdedup tier and the
+    SQL oracle share."""
+    return df.select(
+        "vec_id",
+        *extra,
+        F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda x: F.round(x * _QUANT_SCALE).cast("long"),
+        ).alias("eq"),
+    ).withColumn("n", F.sqrt(_dot_long(F.col("eq"), F.col("eq")).cast("double")))
+
+
+def _flag_near_dups(
+    ref: DataFrame, probe: DataFrame, tau_e6: int, *, broadcast_probe: bool = False
+) -> DataFrame:
+    """``probe`` plus ``keep`` (int): 0 iff some SAME-CELL ``ref`` row
+    with higher precedence — an existing row (``is_new = 0``) or a
+    lower vec_id — has sim_e6 >= tau_e6 against it, else 1. Both sides
+    carry (vec_id, cell, eq, n); ``ref`` also carries ``is_new``. The
+    pair join is keyed on ``cell``, so pair work never leaves a cell."""
+    a = ref.select(
         F.col("vec_id").alias("id_a"),
         "cell",
         F.col("eq").alias("ea"),
         F.col("n").alias("na"),
+        F.col("is_new").alias("a_new"),
     )
-    b = assigned.select(
+    b = probe.select(
         F.col("vec_id").alias("id_b"),
         "cell",
         F.col("eq").alias("eb"),
         F.col("n").alias("nb"),
     )
+    if broadcast_probe:
+        b = F.broadcast(b)
     pair_sim = F.floor(
         F.lit(1e6)
         * _dot_long(F.col("ea"), F.col("eb")).cast("double")
         / (F.col("na") * F.col("nb"))
         + F.lit(0.5)
     ).cast("long")
+    precedence = (F.col("a_new") == 0) | (F.col("id_a") < F.col("id_b"))
     dups = (
         a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(precedence)
         .filter(pair_sim >= tau_e6)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("_dup", F.lit(1))
     )
-    return (
-        assigned.select("vec_id", "cell")
-        .join(dups, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            F.when(F.col("_dup").isNull(), 1).otherwise(0).cast("int").alias("kept"),
-        )
+    return probe.join(dups, "vec_id", "left").withColumn(
+        "keep", F.when(F.col("_dup").isNull(), 1).otherwise(0).cast("int")
     )
 
 
@@ -1142,23 +1165,9 @@ def semantic_dedup_incremental(
     side but only batch-rows on the probe/output side. EAGER like
     semantic_dedup; release via release_local_checkpoints.
     """
-    ex = existing.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ed"),
-        F.lit(0).alias("is_new"),
+    q = _quantize(existing, F.lit(0).alias("is_new")).unionByName(
+        _quantize(batch, F.lit(1).alias("is_new"))
     )
-    nw = batch.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("ed"),
-        F.lit(1).alias("is_new"),
-    )
-    q = ex.unionByName(nw).select(
-        "vec_id",
-        "is_new",
-        F.transform("ed", lambda x: F.round(x * _QUANT_SCALE).cast("long")).alias(
-            "eq"
-        ),
-    ).withColumn("n", F.sqrt(_dot_long(F.col("eq"), F.col("eq")).cast("double")))
 
     seed_pred = (F.col("vec_id") % seed_stride == 0) & (F.col("is_new") == 0)
     if seed_max_id is not None:
@@ -1177,52 +1186,18 @@ def semantic_dedup_incremental(
         # corpus rather than silently vanishing. Within-batch near-dups
         # are NOT judged here (there are no cells to judge in) — the next
         # batch sees this one as corpus and dedups normally.
-        return nw.select(
+        return batch.select(
             "vec_id",
             F.lit(None).cast("long").alias("cell"),
             F.lit(1).cast("int").alias("admitted"),
         )
 
-    a = assigned.select(
-        F.col("vec_id").alias("id_a"),
-        "cell",
-        F.col("eq").alias("ea"),
-        F.col("n").alias("na"),
-        F.col("is_new").alias("a_new"),
-    )
-    b = assigned.filter(F.col("is_new") == 1).select(
-        F.col("vec_id").alias("id_b"),
-        "cell",
-        F.col("eq").alias("eb"),
-        F.col("n").alias("nb"),
-    )
-    pair_sim = F.floor(
-        F.lit(1e6)
-        * _dot_long(F.col("ea"), F.col("eb")).cast("double")
-        / (F.col("na") * F.col("nb"))
-        + F.lit(0.5)
-    ).cast("long")
-    precedence = (F.col("a_new") == 0) | (F.col("id_a") < F.col("id_b"))
-    dups = (
-        a.join(b, "cell")
-        .filter(precedence)
-        .filter(pair_sim >= tau_e6)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-        .withColumn("_dup", F.lit(1))
-    )
-    return (
-        assigned.filter(F.col("is_new") == 1)
-        .select("vec_id", "cell")
-        .join(dups, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            F.when(F.col("_dup").isNull(), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("admitted"),
-        )
+    return _flag_near_dups(
+        assigned, assigned.filter(F.col("is_new") == 1), tau_e6
+    ).select(
+        "vec_id",
+        F.col("cell").cast("long").alias("cell"),
+        F.col("keep").alias("admitted"),
     )
 
 
@@ -1273,158 +1248,135 @@ class _AdoptFromStoreMeta:
 # supply the parameters the legacy caller contract required.
 ADOPT_FROM_STORE = _AdoptFromStoreMeta()
 
-# --- construction-scoped store hint (round 17, optimization round 1) ---------
+# --- session router cache (round 18) -------------------------------------------
 #
-# build_semdedup_store already holds, at build time, everything a judge
-# call later re-derives from the store relation with DRIVER JOBS: the
-# metadata parameters (it wrote them) and the seed router state (the
-# coarse matrix / one-level seed rows it collected for the corpus
-# assignment). Carrying them on the returned DataFrame OBJECT (a plain
-# Python attribute — construction-scoped, exactly like the operator
-# localCheckpoint lifetimes; it does NOT survive a parquet round-trip,
-# where the judge falls back to the in-band metadata row + collects)
-# removes 2 serial driver jobs per judge call (metadata read + coarse
-# collect), and append_to_semdedup_store forwards it unchanged (the
-# appended rows are never seeds — frozen build-time structure), so a
-# multi-batch ingest SEQUENCE pays ZERO per-batch driver collects.
-# Values are identical by construction: the store's seed rows are the
-# build's q.filter(seed_pred) rows with eq/n persisted verbatim, and
-# both sides order by vec_id with the same LIMIT — parity-pinned by
-# test_round17_perf_contracts (hint path == stripped-hint path).
+# Judging a batch needs the store's ROUTER: its metadata dict plus the
+# seed-router state (the two-level coarse tuple, or the one-level seed
+# rows). Deriving it from the store relation costs serial driver jobs
+# (metadata read + seed collect), yet it is a pure function of the
+# store's contents under the frozen-seed policy. This list holds it for
+# the SESSION only — within-run state that dies with the process, never
+# persisted. An entry is (key, analyzed plan, router) and HITS when the
+# key is equal and the plan is ``sameResult`` to the entry's:
 #
-# The hint dict is FROZEN BY CONVENTION (ADVICE r17): nothing may
-# mutate its contents after construction — forwards hand out shallow
-# copies so sibling stores never alias one mutable dict. Retention
-# note: a one-level hint pins the K collected seed Rows (O(K x dim)
-# driver memory) for the lifetime of the store object — the same
-# bounded-K envelope the one-level tier's collect already requires,
-# now long-lived; two-level hints hold only the O(coarse_k) matrix.
-_SEMDEDUP_HINT_ATTR = "_hhek_semdedup_build_hint"
-
-
-def _store_hint(store: DataFrame) -> dict | None:
-    hint = getattr(store, _SEMDEDUP_HINT_ATTR, None)
-    if isinstance(hint, dict) and "meta" in hint:
-        return hint
-    return None
-
-
-# --- session-scoped router cache for FILE-BACKED stores (round 18) -----------
+# - the key is (application id, (path, size, mtime_ns) of every file
+#   the plan reads): rewriting or adding a file changes it, so a
+#   rebuild, append or compaction at the same path misses;
+# - ``sameResult`` is exact logical-plan equality after
+#   canonicalisation: an identity ``select(*cols)`` hits, while any
+#   filter misses (a restriction can change the visible seed set), as
+#   does a union rebuilt from the same leaves — misses are
+#   conservative, never wrong.
 #
-# VERDICT r17 #4: a parquet-backed store paid the metadata read and the
-# seed-router collect PER JUDGE CALL (the streaming tier reopens the
-# store every micro-batch; a pipeline looping
-# semantic_dedup_incremental_from_store over a materialized store pays
-# the same), even though the router is a pure function of the store's
-# bytes under the frozen-seed policy. This cache keys the derived
-# router on (application id, every leaf file's (path, size, mtime_ns),
-# EXACT logical-plan equality via sameResult) and holds it for the
-# SESSION only — a module list that dies with the process. It is
-# within-run state, never persisted, and never fires for the
-# in-process checkpoint-leaf stores the bench/registry queries build
-# (their plans have no file leaves — they carry the construction hint
-# instead, and every bench run re-derives its stores from parquet
-# inputs as before). Invalidation is by content signature + plan
-# identity: a rebuild at the same path rewrites files (new mtime_ns)
-# -> new key -> re-derive; an append adds files -> new key ->
-# re-derive (conservative — appended rows are never seeds, but
-# correctness here never rests on that policy); a FILTERED relation
-# over the same files fails sameResult -> no hit (a restriction can
-# change the visible seed set, so plan identity is part of the key,
-# not just the bytes).
+# Entries are REGISTERED by the functions that return a store and
+# already hold its router (build_semdedup_store, append_to_semdedup_store,
+# open_semdedup_stream_store), against the exact plan they return, with
+# any leaf kind; entries DERIVED on lookup are kept only for stores whose
+# leaves are all file relations. A pre-metadata store is never cached.
+# A hit moves its entry to the end, and the least recently used entry is
+# evicted first. Retention: a one-level entry pins the K collected seed
+# rows (O(K x dim) driver memory) — the bounded-K envelope the one-level
+# tier already requires; two-level entries hold the O(coarse_k) matrix.
 
-_ROUTER_CACHE: list = []  # [(key, analyzed_jplan, hint)]
+_ROUTER_CACHE: list = []  # [(key, analyzed_jplan, router)], least recent first
 _ROUTER_CACHE_MAX = 8
 _ROUTER_FILES_CAP = 100_000
 
 
-def _store_file_signature(store: DataFrame):
-    """(app_id, ((path, size, mtime_ns), ...)) when every plan leaf of
-    ``store`` is a local file-source relation; None otherwise (no
-    caching — e.g. checkpoint-leaf stores, non-local filesystems)."""
-    try:
-        leaves = store._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() != "LogicalRelation":
-                return None
-            if "HadoopFsRelation" not in leaf.relation().getClass().getName():
-                return None
-        files = store.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > _ROUTER_FILES_CAP:
-        return None
-    sig = file_signature(files)
-    if sig is None:
-        return None
-    return (store.sparkSession.sparkContext.applicationId, sig)
-
-
-def _cached_router(store: DataFrame) -> dict | None:
-    """The judge-side router hint for a file-backed store, derived once
-    per (store version, plan) per session: the metadata dict plus the
-    seed-router state (coarse tuple two-level / seed rows one-level) —
-    exactly what the uncached judge re-derives with serial driver jobs
-    on every call. Returns None whenever caching is not provably safe
-    (non-file leaves, missing metadata row, seedless store, stat
-    failure); the caller then takes the uncached path unchanged."""
-    key = _store_file_signature(store)
-    if key is None:
-        return None
+def _router_key(store: DataFrame):
+    """``(key, analyzed plan, files_only)`` for the router cache:
+    ``key`` is (app_id, file signature of every file the plan reads),
+    or None when it cannot be taken (stat failure, non-local files,
+    more than _ROUTER_FILES_CAP files — no caching then);
+    ``files_only`` says whether every plan leaf is a file-source
+    relation."""
     try:
         jplan = store._jdf.queryExecution().analyzed()
+        leaves = jplan.collectLeaves()
+        files_only = True
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() != "LogicalRelation" or (
+                "HadoopFsRelation" not in leaf.relation().getClass().getName()
+            ):
+                files_only = False
+        files = store.inputFiles()
     except Exception:
-        return None
-    for ekey, eplan, ehint in _ROUTER_CACHE:
-        if ekey == key:
-            try:
-                if eplan.sameResult(jplan):
-                    return dict(ehint)
-            except Exception:
-                return None
+        return None, None, False
+    if len(files) > _ROUTER_FILES_CAP:
+        return None, None, False
+    sig = file_signature(files)
+    if sig is None:
+        return None, None, False
+    return (store.sparkSession.sparkContext.applicationId, sig), jplan, files_only
+
+
+def _router_cache_hit(key, jplan) -> dict | None:
+    """The router of the entry matching (key, jplan), moved to the end
+    of the list; None on a miss."""
+    for i, entry in enumerate(_ROUTER_CACHE):
+        if entry[0] == key and entry[1].sameResult(jplan):
+            _ROUTER_CACHE.append(_ROUTER_CACHE.pop(i))
+            return entry[2]
+    return None
+
+
+def _router_cache_put(key, jplan, router: dict) -> None:
+    _ROUTER_CACHE.append((key, jplan, router))
+    del _ROUTER_CACHE[:-_ROUTER_CACHE_MAX]
+
+
+def _register_router(store: DataFrame, router: dict) -> None:
+    """Record ``router`` as the router state of the exact plan of
+    ``store`` — called by the functions that return a store whose
+    router they already hold. The router dict is frozen from here on:
+    nothing may mutate it (the cache hands out copies)."""
+    key, jplan, _ = _router_key(store)
+    if key is not None and router["meta"] is not None:
+        if _router_cache_hit(key, jplan) is None:
+            _router_cache_put(key, jplan, router)
+
+
+def _store_router(store: DataFrame, coarse_k=ADOPT_FROM_STORE) -> dict:
+    """The router state of ``store``: ``{"meta", "coarse", "seed_rows"}``
+    — the metadata dict (None for a pre-metadata store) plus the
+    two-level coarse tuple or the one-level seed rows (both empty for a
+    seedless store). Served from the session router cache; on a miss,
+    derived here and nowhere else (metadata read, then the seed
+    collect of the store's tier). The tier is the metadata's
+    ``coarse_k``; ``coarse_k`` is consulted only for a pre-metadata
+    store, which needs it explicitly. Returns a copy."""
+    key, jplan, files_only = _router_key(store)
+    router = _router_cache_hit(key, jplan) if key is not None else None
+    if router is not None:
+        return dict(router)
     meta = read_semdedup_store_meta(store)
-    if meta is None:
-        return None
+    coarse_k, _ = _resolve_store_params(meta, coarse_k, ADOPT_FROM_STORE)
     seeds = store.filter(
         (F.col("vec_id") != STORE_META_VEC_ID) & (F.col("is_seed") == 1)
     )
-    if meta["coarse_k"] is None:
-        seed_rows = (
-            seeds.orderBy("vec_id").select("vec_id", "eq", "ccell").collect()
-        )
-        if not seed_rows or any(r["ccell"] is not None for r in seed_rows):
-            # seedless (bootstrap) or inconsistent (two-level ccell on a
-            # one-level-metadata store): leave it to the uncached judge,
-            # which bootstraps / raises exactly as before
-            return None
-        hint = {"meta": meta, "coarse": None, "seed_rows": seed_rows}
+    router = {"meta": meta, "coarse": None, "seed_rows": None}
+    if coarse_k is None:
+        # one-level tier: ALL store seeds driver-collected — the legacy
+        # bounded-K envelope (use only with a fenced seed set)
+        seed_rows = seeds.orderBy("vec_id").select("vec_id", "eq", "ccell").collect()
+        # a TWO-LEVEL store (ccell present) routed one-level would
+        # silently assign batch vectors by global argmax while the
+        # store's cells are route-local — missed rejections with no
+        # error. With a metadata row _resolve_store_params raises
+        # first; this is the guard for pre-metadata stores.
+        if any(r["ccell"] is not None for r in seed_rows):
+            raise ValueError(
+                "semantic_dedup_incremental_from_store: store was built "
+                "two-level (seed ccell present) — pass the same coarse_k "
+                "it was built with, not None"
+            )
+        router["seed_rows"] = seed_rows
     else:
-        coarse = _collect_coarse(seeds, meta["coarse_k"])
-        if coarse is None:
-            return None
-        hint = {"meta": meta, "coarse": coarse, "seed_rows": None}
-    _ROUTER_CACHE.append((key, jplan, hint))
-    del _ROUTER_CACHE[:-_ROUTER_CACHE_MAX]
-    return dict(hint)
-
-
-def carry_store_router(derived: DataFrame, base: DataFrame) -> DataFrame:
-    """Attach ``base``'s router hint (construction-scoped or session-
-    cached) to a relation DERIVED from base by unioning rows that are
-    never seeds and never metadata (the streaming tier's base + delta
-    view — store_rows_for_admitted pins both properties). The derived
-    store's metadata row and seed set then EQUAL base's by
-    construction, so the judge may route against base's state without
-    scanning the union. Returns ``derived`` (hint attached when
-    available; a shallow copy, so sibling relations never alias one
-    mutable dict)."""
-    hint = _store_hint(base)
-    if hint is None:
-        hint = _cached_router(base)
-    if hint is not None:
-        setattr(derived, _SEMDEDUP_HINT_ATTR, dict(hint))
-    return derived
+        router["coarse"] = _collect_coarse(seeds, coarse_k)
+    if key is not None and files_only and meta is not None:
+        _router_cache_put(key, jplan, router)
+    return dict(router)
 
 
 def _store_meta_df(
@@ -1603,16 +1555,15 @@ def build_semdedup_store(
     mirrors what the parquet round-trip (materialize_semdedup_store)
     gives a production deployment for free. Release via
     ``release_local_checkpoints`` once written/consumed.
+
+    The build already holds the store's router (its metadata and the
+    seed-router state it collected for the corpus assignment), so it
+    registers it in the session router cache against the returned
+    plan: judge calls against this store run no metadata read and no
+    seed collect. A parquet round-trip reopens a different plan, whose
+    router is derived once per session.
     """
-    e = existing.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ed")
-    )
-    q = e.select(
-        "vec_id",
-        F.transform("ed", lambda x: F.round(x * _QUANT_SCALE).cast("long")).alias(
-            "eq"
-        ),
-    ).withColumn("n", F.sqrt(_dot_long(F.col("eq"), F.col("eq")).cast("double")))
+    q = _quantize(existing)
 
     seed_pred = F.col("vec_id") % seed_stride == 0
     if seed_max_id is not None:
@@ -1621,11 +1572,7 @@ def build_semdedup_store(
     meta = _store_meta_df(
         q.sparkSession, seed_stride, seed_max_id, coarse_k, fine_salt
     )
-    # the hint rides on the returned DataFrame object (see
-    # _SEMDEDUP_HINT_ATTR): judge calls against THIS store skip the
-    # metadata-read and coarse-collect driver jobs; a parquet
-    # round-trip drops it and the in-band metadata row takes over
-    hint: dict = {
+    router: dict = {
         "meta": {
             "format_version": SEMDEDUP_STORE_FORMAT_VERSION,
             "seed_stride": seed_stride,
@@ -1638,23 +1585,21 @@ def build_semdedup_store(
         "seed_rows": None,
     }
     if coarse_k is None:
-        assigned, seed_rows = _assign_one_level(
+        assigned, router["seed_rows"] = _assign_one_level(
             q, seed_pred, checkpoint=False, return_seed_rows=True
         )
-        hint["seed_rows"] = seed_rows
     else:
         # the coarse tuple collected for the assignment doubles as the
         # judge calls' router state (r17); each vector's coarse route
         # rides through the fine cogroup as an output column (r18
         # keep_ccell), so the old K-row seed-route join — and its
         # broadcast job — is gone from the store plan (guide §2.4)
-        assigned, coarse_state = _assign_two_level(
+        assigned, router["coarse"] = _assign_two_level(
             q, seed_pred, coarse_k, fine_salt,
             return_coarse_state=True, checkpoint=False, keep_ccell=True,
         )
-        hint["coarse"] = coarse_state
     if assigned is None:
-        setattr(meta, _SEMDEDUP_HINT_ATTR, hint)
+        _register_router(meta, router)
         return meta
 
     out = assigned.withColumn(
@@ -1677,19 +1622,8 @@ def build_semdedup_store(
             .alias("ccell"),
         )
     store = data.unionByName(meta).localCheckpoint(eager=True)
-    setattr(store, _SEMDEDUP_HINT_ATTR, hint)
+    _register_router(store, router)
     return store
-
-
-def _bootstrap_admit(bq: DataFrame) -> DataFrame:
-    """Admit-all bootstrap (no corpus seeds — see
-    semantic_dedup_incremental's BOOTSTRAP note): one row per batch
-    vector, cell NULL, admitted 1."""
-    return bq.select(
-        "vec_id",
-        F.lit(None).cast("long").alias("cell"),
-        F.lit(1).cast("int").alias("admitted"),
-    )
 
 
 def _store_is_cell_partitioned(store: DataFrame) -> bool:
@@ -1722,103 +1656,58 @@ def _judge_batch_against_store(
     batch: DataFrame,
     *,
     tau_e6: int,
-    coarse_k: int | None,
-    fine_salt: int,
+    coarse_k,
+    fine_salt,
     broadcast_batch: bool,
     prune_store_cells: bool | None,
     prune_cell_cap: int,
-    hint: dict | None = None,
-) -> tuple[DataFrame, DataFrame | None, DataFrame]:
-    """Shared core of the store-path judge (round 17 refactor): returns
-    ``(bq, assigned_batch, judged)`` where ``assigned_batch`` is None
-    on the bootstrap branch (no store seeds — ``judged`` is then the
-    bootstrap decisions). ``judged`` carries one row per batch vector
-    with (vec_id, cell, eq, n, admitted) — decisions PLUS the
-    quantized vector (r18, VERDICT r17 #3): the append wrapper
-    materializes this ONE relation and derives both its outputs from
-    it by projection, instead of materializing decisions and then
-    re-joining them against the assignment to extract admitted rows
-    (one eager checkpoint + one join + its broadcast job saved per
-    append, and every later scan of the extended store reads a plain
-    filter instead of re-running that join). ``coarse_k``/``fine_salt``
-    arrive already resolved against the store metadata. ``hint`` is the
-    build-time router state riding on stores built in-process (see
-    ``_SEMDEDUP_HINT_ATTR``) — when present, the seed-router collects
-    below are skipped (the hint holds the identical rows/state the
-    collect would return). Both public wrappers
-    (``semantic_dedup_incremental_from_store``,
-    ``append_to_semdedup_store``) consume it; see the former for the
-    full semantics/scale contract."""
-    nw = batch.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ed")
-    )
-    bq = nw.select(
-        "vec_id",
-        F.transform("ed", lambda x: F.round(x * _QUANT_SCALE).cast("long")).alias(
-            "eq"
-        ),
-    ).withColumn("n", F.sqrt(_dot_long(F.col("eq"), F.col("eq")).cast("double")))
+) -> tuple[dict, DataFrame | None, DataFrame]:
+    """The one judge core of the store path:
+    ``semantic_dedup_incremental_from_store``,
+    ``append_to_semdedup_store`` and the streaming handler all call it.
+    ``coarse_k``/``fine_salt`` are the caller's, adopted from or
+    validated against the store metadata here. Returns ``(router,
+    assigned_batch, judged)``:
+
+    - ``router`` — the store's router state from ``_store_router``
+      (the session router cache);
+    - ``assigned_batch`` — the batch-assignment checkpoint, or None on
+      the bootstrap branch (a seedless store: every batch vector is
+      admitted with cell NULL);
+    - ``judged`` — one row per batch vector with (vec_id, cell, eq, n,
+      admitted): decisions PLUS the quantized vector (r18, VERDICT r17
+      #3), so ``_materialize_judged`` derives both the decisions and
+      the admitted store rows from one materialization by projection.
+
+    See semantic_dedup_incremental_from_store for the full
+    semantics/scale contract."""
+    router = _store_router(store, coarse_k)
+    coarse_k, fine_salt = _resolve_store_params(router["meta"], coarse_k, fine_salt)
+    bq = _quantize(batch)
+    if router["coarse"] is None and not router["seed_rows"]:
+        # BOOTSTRAP: no store seeds — see semantic_dedup_incremental
+        return router, None, bq.select(
+            "vec_id",
+            F.lit(None).cast("long").alias("cell"),
+            "eq",
+            "n",
+            F.lit(1).cast("int").alias("admitted"),
+        )
 
     # the metadata row (vec_id = -1) is control state, not corpus data:
     # keep it out of the seed set (is_seed = -1 already does) AND the
     # pair probe side
     data_store = store.filter(F.col("vec_id") != STORE_META_VEC_ID)
-    seeds = data_store.filter(F.col("is_seed") == 1)
     if coarse_k is None:
-        if hint is not None:
-            # build-time seed rows handed over in-process, or the
-            # session router cache's rows (r18): identical to the
-            # collect below by construction (the store's seed eq rows
-            # ARE the build's, persisted verbatim; a one-level build
-            # never writes ccell — build hints carry no ccell field and
-            # cached rows were verified all-NULL at cache build, so the
-            # two-level backstop cannot fire)
-            seed_rows = hint["seed_rows"] or []
-        else:
-            # one-level tier: ALL store seeds driver-collected — the
-            # legacy bounded-K envelope (use only with a fenced seed set)
-            seed_rows = (
-                seeds.orderBy("vec_id").select("vec_id", "eq", "ccell").collect()
-            )
-        if not seed_rows:
-            return bq, None, _bootstrap_admit(bq)
-        # a TWO-LEVEL store (ccell present) queried one-level would
-        # silently assign batch vectors by global argmax while the
-        # store's cells are route-local — missed rejections with no
-        # error. The seeds are already on the driver, so the check is
-        # free. (With a metadata row this is unreachable —
-        # _resolve_store_params raises first; kept as the backstop for
-        # pre-metadata stores, where it was the only guard. Hint rows
-        # carry no ccell field — built one-level, ccell is NULL by
-        # construction.)
-        if hint is None and any(r["ccell"] is not None for r in seed_rows):
-            raise ValueError(
-                "semantic_dedup_incremental_from_store: store was built "
-                "two-level (seed ccell present) — pass the same coarse_k "
-                "it was built with, not None"
-            )
-        assigned_batch = _one_level_assign(bq, seed_rows)
+        assigned_batch = _one_level_assign(bq, router["seed_rows"])
     else:
-        coarse = hint["coarse"] if hint is not None else _collect_coarse(
-            seeds, coarse_k
-        )
-        if coarse is None:
-            return bq, None, _bootstrap_admit(bq)
-        route = _coarse_route_udf(*coarse)
+        route = _coarse_route_udf(*router["coarse"])
         v = bq.withColumn("ccell", route("vec_id", "eq"))
-        s = seeds.select(
+        s = data_store.filter(F.col("is_seed") == 1).select(
             "ccell", F.col("vec_id").alias("cell"), F.col("eq").alias("seq")
         )
         assigned_batch = _fine_assign(v, s, fine_salt)
 
-    b = assigned_batch.select(
-        F.col("vec_id").alias("id_b"),
-        "cell",
-        F.col("eq").alias("eb"),
-        F.col("n").alias("nb"),
-    )
-    if broadcast_batch:
-        b = F.broadcast(b)
     if prune_store_cells is None:
         # auto (VERDICT r16 #3): prune when the store scan is actually
         # cell-partitioned — the only case where the IN-list becomes a
@@ -1840,47 +1729,51 @@ def _judge_batch_against_store(
         # and a batch touching more distinct cells than prune_cell_cap
         # would bloat the Catalyst plan with the literal list for
         # little pruning gain — fall back to the streamed full scan
-    a = pair_store.select(
-        F.col("vec_id").alias("id_a"),
-        "cell",
-        F.col("eq").alias("ea"),
-        F.col("n").alias("na"),
-        F.lit(0).alias("a_new"),
+    ref = pair_store.select(
+        "vec_id", "cell", "eq", "n", F.lit(0).alias("is_new")
     ).unionByName(
-        assigned_batch.select(
-            F.col("vec_id").alias("id_a"),
-            "cell",
-            F.col("eq").alias("ea"),
-            F.col("n").alias("na"),
-            F.lit(1).alias("a_new"),
-        )
+        assigned_batch.select("vec_id", "cell", "eq", "n", F.lit(1).alias("is_new"))
     )
-    pair_sim = F.floor(
-        F.lit(1e6)
-        * _dot_long(F.col("ea"), F.col("eb")).cast("double")
-        / (F.col("na") * F.col("nb"))
-        + F.lit(0.5)
-    ).cast("long")
-    precedence = (F.col("a_new") == 0) | (F.col("id_a") < F.col("id_b"))
-    dups = (
-        a.join(b, "cell")
-        .filter(precedence)
-        .filter(pair_sim >= tau_e6)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-        .withColumn("_dup", F.lit(1))
-    )
-    judged = assigned_batch.join(dups, "vec_id", "left").select(
+    judged = _flag_near_dups(
+        ref, assigned_batch, tau_e6, broadcast_probe=broadcast_batch
+    ).select(
         "vec_id",
         F.col("cell").cast("long").alias("cell"),
         "eq",
         "n",
-        F.when(F.col("_dup").isNull(), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("admitted"),
+        F.col("keep").alias("admitted"),
     )
-    return bq, assigned_batch, judged
+    return router, assigned_batch, judged
+
+
+def _materialize_judged(
+    assigned_batch: DataFrame | None, judged: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """``(decisions, admitted)`` of a judged batch, both projections of
+    ONE batch-sized eager checkpoint of ``judged`` (r18, VERDICT r17
+    #3), so neither re-runs the pair join. ``decisions`` is (vec_id,
+    cell, admitted); ``admitted`` is the admitted rows in store schema:
+    ``eq``/``n`` from the judge (no re-quantization), ``is_seed = 0``
+    (the frozen-seed append policy), and never a metadata row (vec_id
+    -1 cannot be admitted), so appending them to a store keeps its one
+    metadata row unique. Releasing ``decisions`` frees the checkpoint
+    both read."""
+    judged = judged.localCheckpoint(eager=True)
+    # the batch assignment judged was computed from is no longer read
+    # (the pre-checkpoint judged is NOT released: its lineage holds the
+    # store's own checkpoint, which the store's consumers still read)
+    if assigned_batch is not None:
+        release_local_checkpoints(assigned_batch)
+    decisions = judged.select("vec_id", "cell", "admitted")
+    admitted = judged.filter(F.col("admitted") == 1).select(
+        "vec_id",
+        "cell",
+        "eq",
+        "n",
+        F.lit(0).cast("int").alias("is_seed"),
+        F.lit(None).cast("long").alias("ccell"),
+    )
+    return decisions, admitted
 
 
 def semantic_dedup_incremental_from_store(
@@ -1949,6 +1842,13 @@ def semantic_dedup_incremental_from_store(
     the plan for little gain, so the path falls back to the streamed
     scan (ADVICE r16).
 
+    The store's router (metadata plus seed-router state) comes from
+    the session router cache: registered there by the function that
+    returned the store (``build_semdedup_store``,
+    ``append_to_semdedup_store``, ``open_semdedup_stream_store``), or
+    derived once per session for a store read from files. Any other
+    relation pays the metadata read and the seed collect per call.
+
     Scale shape at 100 TB: per-batch driver state is O(coarse_k); the
     only corpus-sized work is the streamed store scan in the pair
     join (columnar, pre-quantized, prunable by cell partitioning when
@@ -1956,17 +1856,7 @@ def semantic_dedup_incremental_from_store(
     batch side only (the batch assignment localCheckpoints);
     release via ``release_local_checkpoints``.
     """
-    # stores built in-process carry their build parameters and router
-    # state on the object (zero driver jobs to re-derive them); file-
-    # backed stores fall back to the SESSION ROUTER CACHE (r18 — one
-    # derivation per store version per session), then to the in-band
-    # metadata row + collects
-    hint = _store_hint(store)
-    if hint is None:
-        hint = _cached_router(store)
-    meta = hint["meta"] if hint is not None else read_semdedup_store_meta(store)
-    coarse_k, fine_salt = _resolve_store_params(meta, coarse_k, fine_salt)
-    _, assigned_batch, judged = _judge_batch_against_store(
+    _, _, judged = _judge_batch_against_store(
         store,
         batch,
         tau_e6=tau_e6,
@@ -1975,10 +1865,7 @@ def semantic_dedup_incremental_from_store(
         broadcast_batch=broadcast_batch,
         prune_store_cells=prune_store_cells,
         prune_cell_cap=prune_cell_cap,
-        hint=hint,
     )
-    if assigned_batch is None:
-        return judged  # bootstrap decisions
     return judged.select("vec_id", "cell", "admitted")
 
 
@@ -2019,7 +1906,10 @@ def append_to_semdedup_store(
       re-quantization), LAZY: judging the next batch against it scans
       the old store plus the appended in-memory rows; persist deltas
       via ``materialize_semdedup_store(..., mode="append")`` when the
-      store lives in parquet.
+      store lives in parquet. Its router (the store's, unchanged by the
+      append) is registered in the session router cache, so judging
+      the next batch against ``new_store`` runs no metadata read and
+      no seed collect.
 
     SEED POLICY (pinned): appended rows are NEVER seeds (``is_seed =
     0``) — the cell structure is FROZEN at build time. Consequences:
@@ -2043,12 +1933,7 @@ def append_to_semdedup_store(
     would admit everything forever while looking like it dedups —
     build the store from the first corpus slice instead.
     """
-    hint = _store_hint(store)
-    if hint is None:
-        hint = _cached_router(store)
-    meta = hint["meta"] if hint is not None else read_semdedup_store_meta(store)
-    coarse_k, fine_salt = _resolve_store_params(meta, coarse_k, fine_salt)
-    _, assigned_batch, judged = _judge_batch_against_store(
+    router, assigned_batch, judged = _judge_batch_against_store(
         store,
         batch,
         tau_e6=tau_e6,
@@ -2057,7 +1942,6 @@ def append_to_semdedup_store(
         broadcast_batch=broadcast_batch,
         prune_store_cells=prune_store_cells,
         prune_cell_cap=prune_cell_cap,
-        hint=hint,
     )
     if assigned_batch is None:
         raise ValueError(
@@ -2067,75 +1951,12 @@ def append_to_semdedup_store(
             "future batch unjudged; build_semdedup_store over the first "
             "corpus slice instead"
         )
-    # ONE batch-sized eager checkpoint (r18, VERDICT r17 #3): judged
-    # carries decisions AND the admitted rows' eq/n, so both outputs
-    # below are pure projections of the same materialized relation —
-    # the r17 shape paid a second serial checkpoint for decisions plus
-    # an assignment⋈decisions join (and its broadcast job) that every
-    # later scan of the extended store re-ran
-    judged = judged.localCheckpoint(eager=True)
-    # the batch assignment judged was computed from is no longer read
-    # (the pre-checkpoint judged is NOT released: its lineage holds the
-    # store's own checkpoint, which new_store still reads)
-    release_local_checkpoints(assigned_batch)
-    decisions = judged.select("vec_id", "cell", "admitted")
-    admitted = judged.filter(F.col("admitted") == 1).select(
-        "vec_id",
-        "cell",
-        "eq",
-        "n",
-        F.lit(0).cast("int").alias("is_seed"),
-        F.lit(None).cast("long").alias("ccell"),
-    )
+    decisions, admitted = _materialize_judged(assigned_batch, judged)
     new_store = store.unionByName(admitted)
-    if hint is not None:
-        # the appended rows are NEVER seeds (frozen build-time cell
-        # structure), so the build's metadata and router state hold
-        # verbatim for the extended store: forward the hint — a SHALLOW
-        # COPY (ADVICE r17: the dict is treated as frozen; copying the
-        # top level means no future mutation of one store's hint can
-        # alias into its siblings'; the coarse/seed_rows values are
-        # shared by reference, bounded O(coarse_k)/O(K) driver state
-        # retained for the store object's lifetime) — and the NEXT
-        # batch's judge pays zero driver collects too
-        setattr(new_store, _SEMDEDUP_HINT_ATTR, dict(hint))
+    # the appended rows are NEVER seeds (frozen build-time cell
+    # structure), so the store's router holds verbatim for new_store
+    _register_router(new_store, router)
     return decisions, new_store
-
-
-def store_rows_for_admitted(batch: DataFrame, decisions: DataFrame) -> DataFrame:
-    """Store-schema rows for the ADMITTED subset of a judged batch —
-    the persistable form of what ``append_to_semdedup_store`` folds in
-    (round 17; the streaming tier writes these as per-micro-batch
-    delta relations). Re-quantizes only the admitted embeddings
-    (O(|admitted|) — the same quantization expressions as the judge,
-    so ``eq``/``n`` are bit-identical to the in-memory append path by
-    construction). ``is_seed = 0`` always: the frozen-seed append
-    policy. Never emits a metadata row (vec_id -1 cannot be admitted),
-    so appending the result to a store path leaves the store's single
-    metadata row unique."""
-    adm = decisions.filter(F.col("admitted") == 1).select("vec_id", "cell")
-    q = (
-        batch.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("ed")
-        )
-        .select(
-            "vec_id",
-            F.transform(
-                "ed", lambda x: F.round(x * _QUANT_SCALE).cast("long")
-            ).alias("eq"),
-        )
-        .withColumn(
-            "n", F.sqrt(_dot_long(F.col("eq"), F.col("eq")).cast("double"))
-        )
-    )
-    return q.join(adm, "vec_id").select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        "eq",
-        "n",
-        F.lit(0).cast("int").alias("is_seed"),
-        F.lit(None).cast("long").alias("ccell"),
-    )
 
 
 def materialize_semdedup_store(

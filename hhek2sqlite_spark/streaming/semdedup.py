@@ -13,8 +13,8 @@ Store layout under one root (all paths deterministic in batch_id):
                                     metadata row included
                                     (materialize_semdedup_store)
     root/delta/ingest_batch=N/      admitted rows of micro-batch N in
-                                    store schema (store_rows_for_admitted
-                                    — never a metadata row)
+                                    store schema (never a seed, never
+                                    a metadata row)
     root/decisions/ingest_batch=N/  the (vec_id, cell, admitted)
                                     decisions of micro-batch N — the
                                     stream's queryable output
@@ -51,18 +51,15 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.similarity import (
     ADOPT_FROM_STORE,
     SEMDEDUP_STORE_DDL,
     _judge_batch_against_store,
-    _resolve_store_params,
-    _store_hint,
-    carry_store_router,
+    _materialize_judged,
+    _register_router,
+    _store_router,
     materialize_semdedup_store,
-    read_semdedup_store_meta,
-    store_rows_for_admitted,
 )
 from ..operators.util import release_local_checkpoints
 
@@ -112,16 +109,17 @@ def open_semdedup_stream_store(
     when N is re-judged. The base stays a cell-partitioned scan inside
     the union, so AUTO cell pruning still applies to it.
 
-    r18 (guide §5, VERDICT r17 #4): the returned relation carries the
-    BASE's router hint (metadata + seed-router state), served from the
-    session router cache — derived with driver jobs once per base
-    version and reused by every micro-batch, instead of re-reading the
-    metadata row and re-collecting the coarse seeds from the whole
-    base+delta union per batch. Exact because deltas written by this
-    module are admitted rows only (never seeds, never a metadata row —
-    store_rows_for_admitted pins both), so the union's router state IS
-    the base's; compaction rebuilds base (new file mtimes), which
-    invalidates the cache entry by content signature."""
+    r18 (guide §5, VERDICT r17 #4): the BASE's router (metadata +
+    seed-router state) is derived with driver jobs once per base
+    version per session (the session router cache) and registered for
+    the returned relation, so each micro-batch's judge reuses it
+    instead of re-reading the metadata row and re-collecting the coarse
+    seeds from the whole base+delta union. Exact because deltas written
+    by this module are admitted rows only (never seeds, never a
+    metadata row), so the union's router state IS the base's;
+    compaction rebuilds base (new file mtimes), which invalidates the
+    cache entry by content signature. A base without a metadata row
+    raises here: the stream adopts its parameters from that row."""
     base = spark.read.schema(SEMDEDUP_STORE_DDL).parquet(
         os.path.join(root, "base")
     ).select("vec_id", "cell", "eq", "n", "is_seed", "ccell")
@@ -133,7 +131,8 @@ def open_semdedup_stream_store(
             os.path.join(root, "delta", f"ingest_batch={i}")
         )
         store = store.unionByName(delta)
-    return carry_store_router(store, base)
+    _register_router(store, _store_router(base))
+    return store
 
 
 def judge_semdedup_batch(
@@ -152,69 +151,36 @@ def judge_semdedup_batch(
     ADOPTED from the base store's metadata row — a stream cannot drift
     from its store's cell structure.
 
-    r18 (guide §5, VERDICT r17 #3/#4): the handler drives the judge
-    CORE directly so both per-batch writes are projections of ONE
-    batch-grain materialization — the ``judged`` relation already
-    carries the admitted rows' quantized vectors (eq/n), so the old
-    ``store_rows_for_admitted`` re-quantize + decisions join (and its
-    broadcast job) is gone from the per-batch chain. Decision and
-    delta contents are bit-identical to the old path (same quantize
-    expressions, same admitted filter — pinned by the replay and
-    drain tests). The bootstrap branch (no store seeds — only
-    reachable on a hand-assembled root, init refuses seedless bases)
-    keeps the old shape."""
-    spark = batch_df.sparkSession
-    store = open_semdedup_stream_store(spark, root, upto_batch_id=batch_id)
-    hint = _store_hint(store)
-    meta = hint["meta"] if hint is not None else read_semdedup_store_meta(store)
-    coarse_k, fine_salt = _resolve_store_params(
-        meta, ADOPT_FROM_STORE, ADOPT_FROM_STORE
+    Both per-batch writes are projections of ONE batch-grain
+    materialization of the judge core's output (``_materialize_judged``,
+    shared with append_to_semdedup_store), which carries the admitted
+    rows' quantized vectors (eq/n) — including on the bootstrap branch
+    (no store seeds, only reachable on a hand-assembled root: init
+    refuses seedless bases), where every row is admitted with cell
+    NULL."""
+    store = open_semdedup_stream_store(
+        batch_df.sparkSession, root, upto_batch_id=batch_id
     )
     _, assigned_batch, judged = _judge_batch_against_store(
         store,
         batch_df,
         tau_e6=tau_e6,
-        coarse_k=coarse_k,
-        fine_salt=fine_salt,
+        coarse_k=ADOPT_FROM_STORE,
+        fine_salt=ADOPT_FROM_STORE,
         broadcast_batch=broadcast_batch,
         prune_store_cells=None,
         prune_cell_cap=10_000,
-        hint=hint,
     )
-    if assigned_batch is None:
-        # bootstrap: judged is the admit-all decisions (no eq/n) — use
-        # the legacy extraction path for the delta rows
-        decisions = judged.localCheckpoint(eager=True)
-        try:
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(root, "decisions", f"ingest_batch={batch_id}")
-            )
-            store_rows_for_admitted(batch_df, decisions).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "delta", f"ingest_batch={batch_id}"))
-        finally:
-            release_local_checkpoints(decisions)
-        return
-    # ONE batch-sized eager checkpoint feeding both writes (they must
-    # not re-run the judge — same reuse contract as append_to_semdedup_store)
-    judged = judged.localCheckpoint(eager=True)
-    release_local_checkpoints(assigned_batch)
+    decisions, admitted = _materialize_judged(assigned_batch, judged)
     try:
-        judged.select("vec_id", "cell", "admitted").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "decisions", f"ingest_batch={batch_id}"))
-        judged.filter(F.col("admitted") == 1).select(
-            "vec_id",
-            "cell",
-            "eq",
-            "n",
-            F.lit(0).cast("int").alias("is_seed"),
-            F.lit(None).cast("long").alias("ccell"),
-        ).write.mode("overwrite").parquet(
+        decisions.write.mode("overwrite").parquet(
+            os.path.join(root, "decisions", f"ingest_batch={batch_id}")
+        )
+        admitted.write.mode("overwrite").parquet(
             os.path.join(root, "delta", f"ingest_batch={batch_id}")
         )
     finally:
-        release_local_checkpoints(judged)
+        release_local_checkpoints(decisions)
 
 
 def compact_semdedup_stream_store(spark: SparkSession, root: str) -> int:

@@ -149,8 +149,8 @@ def test_parallel_edges_count_toward_degree(spark):
     assert out == expect
 
 
-# --- construction-scoped store hint (r17 optimization: zero per-batch ------
-# driver collects on in-process stores) ---------------------------------------
+# --- registered store router (zero per-batch driver collects on stores ------
+# returned by build/append) ----------------------------------------------------
 
 
 def _store_batch(spark):
@@ -168,15 +168,21 @@ def _store_batch(spark):
     return base, batch
 
 
-def _strip_hint(store):
-    """Same relation, new DataFrame object: the construction-scoped hint
-    attribute does not propagate, so the judge falls back to the in-band
-    metadata row + driver collects (the parquet-roundtrip code path)."""
+def _cold(store):
+    """Empty the session router cache: the next judge against ``store``
+    derives the router from the in-band metadata row + driver collects
+    (the code path of a relation nothing registered)."""
     from hhek2sqlite_spark.operators import similarity
 
-    stripped = store.select(*store.columns)
-    assert similarity._store_hint(stripped) is None
-    return stripped
+    similarity._ROUTER_CACHE.clear()
+    return store
+
+
+def _registered(store) -> bool:
+    from hhek2sqlite_spark.operators import similarity
+
+    key, jplan, _ = similarity._router_key(store)
+    return similarity._router_cache_hit(key, jplan) is not None
 
 
 def _decisions(df):
@@ -188,11 +194,9 @@ def test_store_hint_two_level_matches_cold_path(spark):
 
     base, batch = _store_batch(spark)
     store = similarity.build_semdedup_store(base, seed_stride=8, coarse_k=4)
-    assert similarity._store_hint(store) is not None
+    assert _registered(store)
     hot = similarity.semantic_dedup_incremental_from_store(store, batch)
-    cold = similarity.semantic_dedup_incremental_from_store(
-        _strip_hint(store), batch
-    )
+    cold = similarity.semantic_dedup_incremental_from_store(_cold(store), batch)
     assert _decisions(hot) == _decisions(cold)
 
 
@@ -201,10 +205,9 @@ def test_store_hint_one_level_matches_cold_path(spark):
 
     base, batch = _store_batch(spark)
     store = similarity.build_semdedup_store(base, seed_stride=16, coarse_k=None)
+    assert _registered(store)
     hot = similarity.semantic_dedup_incremental_from_store(store, batch)
-    cold = similarity.semantic_dedup_incremental_from_store(
-        _strip_hint(store), batch
-    )
+    cold = similarity.semantic_dedup_incremental_from_store(_cold(store), batch)
     assert _decisions(hot) == _decisions(cold)
 
 
@@ -216,31 +219,23 @@ def test_append_forwards_hint_and_matches_cold_path(spark):
     batch_b = batch.filter(F.col("vec_id") % 20 != 0)
     store = similarity.build_semdedup_store(base, seed_stride=8, coarse_k=4)
     dec_a, store2 = similarity.append_to_semdedup_store(store, batch_a)
-    # the appended rows are never seeds, so the build hint holds
-    # verbatim — forwarded as a SHALLOW COPY (ADVICE r17: no mutable
-    # dict aliased across sibling stores; the router state inside is
-    # shared by reference, which is fine because the hint is frozen)
-    h0, h2 = similarity._store_hint(store), similarity._store_hint(store2)
-    assert h2 is not None and h2 is not h0
-    assert h2["meta"] == h0["meta"]
-    assert h2["coarse"] is h0["coarse"]
-    assert h2["seed_rows"] is h0["seed_rows"]
+    # the appended rows are never seeds, so the store's router holds
+    # verbatim for the extended store, registered against its plan
+    assert _registered(store2)
+    r0, r2 = similarity._store_router(store), similarity._store_router(store2)
+    assert r2["meta"] == r0["meta"] and r2["coarse"] is r0["coarse"]
     hot = similarity.semantic_dedup_incremental_from_store(store2, batch_b)
-    cold = similarity.semantic_dedup_incremental_from_store(
-        _strip_hint(store2), batch_b
-    )
+    cold = similarity.semantic_dedup_incremental_from_store(_cold(store2), batch_b)
     assert _decisions(hot) == _decisions(cold)
-    # and the append path itself accepts a hintless store identically
-    dec_a_cold, _ = similarity.append_to_semdedup_store(
-        _strip_hint(store), batch_a
-    )
+    # and the append path itself judges an unregistered store identically
+    dec_a_cold, _ = similarity.append_to_semdedup_store(_cold(store), batch_a)
     assert _decisions(dec_a) == _decisions(dec_a_cold)
 
 
 def test_store_hint_does_not_survive_parquet_roundtrip(spark, tmp_path):
-    """materialize_semdedup_store returns a reopened scan relation: no
-    hint rides along (by design — the hint is construction-scoped), and
-    the judge answers identically through the metadata-row path."""
+    """materialize_semdedup_store returns a reopened scan relation, a
+    different plan: nothing is registered for it, and the judge
+    answers identically through the metadata-row path."""
     from hhek2sqlite_spark.operators import similarity
 
     base, batch = _store_batch(spark)
@@ -248,7 +243,7 @@ def test_store_hint_does_not_survive_parquet_roundtrip(spark, tmp_path):
     reopened = similarity.materialize_semdedup_store(
         store, str(tmp_path / "store_pq")
     )
-    assert similarity._store_hint(reopened) is None
+    assert not _registered(reopened)
     hot = similarity.semantic_dedup_incremental_from_store(store, batch)
     via_parquet = similarity.semantic_dedup_incremental_from_store(
         reopened, batch

@@ -200,3 +200,44 @@ def test_three_micro_batches_leave_no_checkpoint(spark, tmp_path, persistent_rdd
         )
         judge_semdedup_batch(batch, batch_id, root=root)
         assert not persistent_rdd_ids() - before, f"micro-batch {batch_id} leaked"
+
+
+def test_bootstrap_batch_on_metadata_only_base(spark, tmp_path):
+    """A root whose base is a metadata-only store (assembled by hand:
+    init refuses seedless bases) takes the bootstrap branch: every
+    decision is admitted with cell NULL, and the delta holds exactly
+    the batch's quantized rows in store schema."""
+    import math
+
+    from hhek2sqlite_spark.operators.similarity import (
+        build_semdedup_store,
+        materialize_semdedup_store,
+    )
+
+    root = str(tmp_path / "semstore")
+    meta_only = build_semdedup_store(
+        spark.createDataFrame([], BATCH_SCHEMA), seed_stride=4, coarse_k=4
+    )
+    materialize_semdedup_store(meta_only, os.path.join(root, "base"))
+    rows = _random_rows(9, 6, seed=51, id_offset=1000)
+    judge_semdedup_batch(
+        spark.createDataFrame(rows, BATCH_SCHEMA), 0, root=root
+    )
+
+    dec = read_semdedup_stream_decisions(spark, root).collect()
+    assert sorted((r["vec_id"], r["cell"], r["admitted"]) for r in dec) == [
+        (vid, None, 1) for vid, _ in rows
+    ]
+
+    def quantized(emb):
+        # Spark's round() is HALF_UP; x * 2^20 is exact in double
+        eq = [int(math.copysign(math.floor(abs(x) * (1 << 20) + 0.5), x)) for x in emb]
+        return eq, math.sqrt(float(sum(v * v for v in eq)))
+
+    delta = spark.read.parquet(os.path.join(root, "delta", "ingest_batch=0"))
+    got = sorted(
+        (r["vec_id"], r["cell"], list(r["eq"]), r["n"], r["is_seed"], r["ccell"])
+        for r in delta.collect()
+    )
+    want = sorted((vid, None, *quantized(emb), 0, None) for vid, emb in rows)
+    assert got == want

@@ -46,15 +46,15 @@ def test_router_cache_matches_cold_path_and_hits(spark, tmp_path):
     reopened = similarity.materialize_semdedup_store(
         store, str(tmp_path / "store_pq")
     )
-    assert similarity._store_hint(reopened) is None  # parquet drops the hint
+    n0 = len(similarity._ROUTER_CACHE)  # the build registered its store
     first = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    assert len(similarity._ROUTER_CACHE) == 1
+    assert len(similarity._ROUTER_CACHE) == n0 + 1  # derived for the reopened plan
     second = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    assert len(similarity._ROUTER_CACHE) == 1  # hit, not a second entry
+    assert len(similarity._ROUTER_CACHE) == n0 + 1  # hit, not a second entry
     _clear_router_cache()
     cold = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
@@ -109,10 +109,11 @@ def test_router_cache_ignores_filtered_store_relations(spark, tmp_path):
         str(tmp_path / "store_pq"),
     )
     # warm the cache with the FULL store
+    n0 = len(similarity._ROUTER_CACHE)
     d_full = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    assert len(similarity._ROUTER_CACHE) == 1
+    assert len(similarity._ROUTER_CACHE) == n0 + 1
     # a filtered store keeps only every-8th-id seeds — a DIFFERENT,
     # valid seed set under one-level routing
     restricted = reopened.filter(
@@ -140,10 +141,11 @@ def test_one_level_router_cache_matches_cold_path(spark, tmp_path):
         similarity.build_semdedup_store(base, seed_stride=8, coarse_k=None),
         str(tmp_path / "store_1l"),
     )
+    n0 = len(similarity._ROUTER_CACHE)
     hot = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
     )
-    assert len(similarity._ROUTER_CACHE) == 1
+    assert len(similarity._ROUTER_CACHE) == n0 + 1
     _clear_router_cache()
     cold = _decisions(
         similarity.semantic_dedup_incremental_from_store(reopened, batch)
@@ -177,8 +179,8 @@ def test_store_ccell_only_on_seed_rows_and_matches_route(spark):
     base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
     store = similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4)
     rows = store.filter(F.col("vec_id") >= 0).collect()
-    hint = similarity._store_hint(store)
-    route = similarity._coarse_route_udf(*hint["coarse"])
+    router = similarity._store_router(store)
+    route = similarity._coarse_route_udf(*router["coarse"])
     # recompute each seed's coarse route independently via the kernel
     seeds = [r for r in rows if r["is_seed"] == 1]
     seed_df = spark.createDataFrame(
@@ -242,7 +244,7 @@ def test_minhash_pairs_cache_released_by_neardup_clusters(
 
 
 def test_cached_router_hint_is_a_copy(spark, tmp_path):
-    """Mutating a hint returned by the session router cache must not
+    """Mutating a router returned by the session router cache must not
     reach the cached entry: the next call sees the original."""
     _clear_router_cache()
     base = spark.createDataFrame(_rows(60, 6, seed=5), BATCH_SCHEMA)
@@ -250,13 +252,13 @@ def test_cached_router_hint_is_a_copy(spark, tmp_path):
         similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4),
         str(tmp_path / "store_pq"),
     )
-    built = similarity._cached_router(reopened)
+    built = similarity._store_router(reopened)
     original = dict(built)
     built["meta"] = None
-    hit = similarity._cached_router(reopened)
+    hit = similarity._store_router(reopened)
     assert hit == original
     hit["coarse"] = None
-    assert similarity._cached_router(reopened) == original
+    assert similarity._store_router(reopened) == original
     _clear_router_cache()
 
 
@@ -302,3 +304,62 @@ def test_load_table_sees_schema_of_rewritten_table(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "nation")
     assert df.columns == ["n_nationkey", "n_name", "n_extra"]
     assert sorted(r.n_extra for r in df.collect()) == [7, 8]
+
+
+# --- one router per store plan ---------------------------------------------------
+
+
+def _no_router_derivation(monkeypatch):
+    """Make every router derivation fail loudly: the metadata read, the
+    coarse collect, and any DataFrame.collect (the one-level seed-row
+    collect) raise."""
+    from pyspark.sql import DataFrame
+
+    def _fail(*_a, **_k):
+        raise AssertionError("router state was derived, not reused")
+
+    monkeypatch.setattr(similarity, "read_semdedup_store_meta", _fail)
+    monkeypatch.setattr(similarity, "_collect_coarse", _fail)
+    monkeypatch.setattr(DataFrame, "collect", _fail)
+
+
+@pytest.mark.parametrize("coarse_k", [4, None])
+def test_judge_reuses_router_of_built_and_appended_store(spark, monkeypatch, coarse_k):
+    """Judging against a just-built store, and against append's
+    new_store, reads no metadata row and collects no seeds: the router
+    registered by build/append is served from the session cache."""
+    base = spark.createDataFrame(_rows(80, 6, seed=5), BATCH_SCHEMA)
+    batch_a = spark.createDataFrame(_rows(10, 6, seed=9, id_offset=1000), BATCH_SCHEMA)
+    batch_b = spark.createDataFrame(_rows(10, 6, seed=5, id_offset=2000), BATCH_SCHEMA)
+    store = similarity.build_semdedup_store(base, seed_stride=4, coarse_k=coarse_k)
+    with monkeypatch.context() as m:
+        _no_router_derivation(m)
+        direct = similarity.semantic_dedup_incremental_from_store(store, batch_b)
+        dec_a, store2 = similarity.append_to_semdedup_store(store, batch_a)
+        after_append = similarity.semantic_dedup_incremental_from_store(store2, batch_b)
+    assert len(_decisions(direct)) == len(_decisions(after_append)) == 10
+    assert len(_decisions(dec_a)) == 10
+    release_local_checkpoints(store2)
+
+
+def test_router_cache_keeps_a_store_that_keeps_getting_hits(spark, monkeypatch):
+    """LRU, not FIFO: a store judged between later registrations
+    survives more than _ROUTER_CACHE_MAX of them (each append registers
+    its new_store), while the cache stays bounded."""
+    base = spark.createDataFrame(_rows(40, 6, seed=5), BATCH_SCHEMA)
+    store = similarity.build_semdedup_store(base, seed_stride=4, coarse_k=4)
+    n_appends = similarity._ROUTER_CACHE_MAX + 2
+    with monkeypatch.context() as m:
+        m.setattr(
+            similarity,
+            "read_semdedup_store_meta",
+            lambda *_a: pytest.fail("the store's router was evicted and re-derived"),
+        )
+        for k in range(n_appends):
+            batch = spark.createDataFrame(
+                _rows(3, 6, seed=60 + k, id_offset=1000 + 10 * k), BATCH_SCHEMA
+            )
+            decisions, _ = similarity.append_to_semdedup_store(store, batch)
+            release_local_checkpoints(decisions)
+    assert len(similarity._ROUTER_CACHE) <= similarity._ROUTER_CACHE_MAX
+    release_local_checkpoints(store)
